@@ -143,19 +143,21 @@ object Bench {
       val nReps = if (extraReps(name)) math.max(reps, 5) else reps
       val timed = (1 to nReps).map { _ =>
         val gc0 = gcMsTotal()
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // cache hygiene between reps AND queries: pipelines that
-        // legitimately persist intermediates (pair tables, vocabularies)
-        // must not accumulate across the run — leftover cached frames
-        // shift later numbers via storage/GC pressure, not plan quality
-        spark.catalog.clearCache()
+        // cache hygiene between reps AND queries: each rep runs in its
+        // own scope, so what a pipeline persisted or pinned (pair
+        // tables, vocabularies, final loop rounds) is released after
+        // the timing — leftover blocks would shift later numbers via
+        // storage/GC pressure, not plan quality
+        val (ok, dt) = operators.Pins.scoped {
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+            }
+          (ok, (System.nanoTime() - t0) / 1e9)
+        }
         (dt, ok, loadAvg(), gcMsTotal() - gc0)
       }
       // only SUCCESSFUL reps count toward timings: a query that starts
@@ -243,11 +245,12 @@ object Bench {
       // noise AND the bench's own decaying 1-minute load (budgeted)
       awaitQuiet()
       val gc0 = gcMsTotal()
-      val t0 = System.nanoTime()
-      val ok = try { fnByName(k)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-               catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      val (ok, dt) = operators.Pins.scoped {
+        val t0 = System.nanoTime()
+        val ok = try { fnByName(k)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+                 catch { case _: Throwable => false }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
       k -> s"[${if (ok) r3(dt) else "null"},${r2(loadAvg())},${gcMsTotal() - gc0}]"
     }
     val loadEnd = loadAvg()

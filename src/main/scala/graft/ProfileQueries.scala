@@ -81,10 +81,11 @@ object ProfileQueries {
       (1 to reps).foreach { r =>
         acc.reset()
         spark.sparkContext.setJobDescription(s"profile:$n")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
+        val dt = operators.Pins.scoped {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
         // let queued listener events drain before reading the counters
         // (listenerBus is private[spark]; a short sleep suffices for a
         // dev aid — counters are advisory, wall time is the number)

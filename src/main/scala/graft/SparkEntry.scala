@@ -3066,21 +3066,11 @@ object SparkEntry {
     * n_nationkey, ...) plus the non-inclusions that prove direction.
     */
   private def indCandidates(t: Tables): Seq[(String, DataFrame, String)] = {
-    // call-site spread (r21, guide §2.5 — the profile_numeric
-    // treatment): orders/lineitem are UNSPREAD at load, so both the
-    // exact side's explode+distinct map work and the sketch side's
-    // per-frame KMV/HLL aggregates ran in ONE task per table
-    // (measured: 1-3-task stages of 1.2-2.5 s summed task time inside
-    // profile_inclusion_sketch). PROJECT to the candidate key columns
-    // BEFORE the spread exchange (guide §2.3): a first version spread
-    // the full-width tables and the exchange carried every column —
-    // 81 MB shuffled where the discovery only reads the keys (~16 MB)
-    // — measured as a net regression (7.2 → 7.4 s) before the
-    // projection, a win after it. Spread ONCE per table here — the
-    // frames are grouped by reference identity in groupByFrame, so
-    // each table still scans once.
-    val orders = t.orders
-    val lineitem = t.lineitem
+    // orders/lineitem stay UNSPREAD at load; the sketch side spreads
+    // its projected key columns per frame in
+    // Discovery.inclusionSketchGate (the exact side reads the raw
+    // layout). Each table is one frame instance here, so groupByFrame
+    // scans it once.
     Seq(
       ("nation.n_nationkey", t.nation, "n_nationkey"),
       ("nation.n_regionkey", t.nation, "n_regionkey"),
@@ -3090,11 +3080,11 @@ object SparkEntry {
       ("supplier.s_suppkey", t.supplier, "s_suppkey"),
       ("supplier.s_nationkey", t.supplier, "s_nationkey"),
       ("part.p_partkey", t.part, "p_partkey"),
-      ("orders.o_orderkey", orders, "o_orderkey"),
-      ("orders.o_custkey", orders, "o_custkey"),
-      ("lineitem.l_orderkey", lineitem, "l_orderkey"),
-      ("lineitem.l_partkey", lineitem, "l_partkey"),
-      ("lineitem.l_suppkey", lineitem, "l_suppkey"))
+      ("orders.o_orderkey", t.orders, "o_orderkey"),
+      ("orders.o_custkey", t.orders, "o_custkey"),
+      ("lineitem.l_orderkey", t.lineitem, "l_orderkey"),
+      ("lineitem.l_partkey", t.lineitem, "l_partkey"),
+      ("lineitem.l_suppkey", t.lineitem, "l_suppkey"))
   }
 
   private def profileInclusion(t: Tables): DataFrame =
@@ -3321,8 +3311,8 @@ object SparkEntry {
     // join's deg² blowup before triangle closure)
     // persisted: both sides of the pair-building self-join read this
     // distinct — unpinned, the corpus scan + distinct shuffle run twice
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
+    val op = operators.Pins.persist(t.lineitem.select(F.col("l_orderkey").as("ok"),
+      F.col("l_partkey").as("pk")).distinct())
     val pairs = op.as("x").join(op.as("y"),
         F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
       .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
@@ -3338,8 +3328,8 @@ object SparkEntry {
     // local clustering coefficients over the SAME co-order graph as
     // graph_triangles (support >= 2) — gated on (lcc desc, deg desc,
     // node) so high-cohesion neighborhoods surface, not just hubs
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
+    val op = operators.Pins.persist(t.lineitem.select(F.col("l_orderkey").as("ok"),
+      F.col("l_partkey").as("pk")).distinct())
     val pairs = op.as("x").join(op.as("y"),
         F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
       .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
@@ -3974,9 +3964,8 @@ object SparkEntry {
     val labels = operators.Graph.labelPropagation(pairs, iters = 5)
     // pin the (small) report eagerly so the support frames can
     // release before the caller consumes the lazy output
-    val out = operators.Graph.modularity(pairs, labels)
-      .orderBy("community")
-      .localCheckpoint(true)
+    val out = operators.Pins.pin(operators.Graph.modularity(pairs, labels)
+      .orderBy("community"))
     pairs.unpersist(); op.unpersist()
     out
   }

@@ -17,13 +17,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        // the scope releases what the query's pipeline persisted or pinned
+        try operators.Pins.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // drop caches a query's pipeline persisted (see Bench)
-        spark.catalog.clearCache()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.operators.Pins
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -65,8 +66,9 @@ object Dedup {
     * instead of re-running the pipeline). ONE eager action runs here:
     * the shingle table's cache fills as the single candidate+verify job
     * computes, so no intermediate count jobs pay scheduler passes.
-    * Callers that are fully done with the result should unpersist() it
-    * (components() does so via releaseInput).
+    * The result is persisted through Pins.persist (released by an
+    * enclosing Pins.scoped); components() can also drop it early via
+    * releaseInput.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int, threshold: Double,
@@ -77,10 +79,10 @@ object Dedup {
     // (id, sh) pairs and the doc sizes for candidate generation, and
     // the sorted arrays for merge-scan verification
     val sets = docShingleSets(df, idCol, textCol, k).persist()
-    val (cands, releasePrefix) = candidatesFromSets(sets, threshold, dfCap, hotSalt)
-    val out = verifyJaccard(cands, sets, threshold).persist()
+    val prefix = prefixTable(sets, threshold, dfCap).persist()
+    val out = Pins.persist(verifyJaccard(candidates(prefix, hotSalt), sets, threshold))
     out.count() // the ONLY materializing action: candidates + verify, one job
-    releasePrefix()
+    prefix.unpersist()
     sets.unpersist()
     out
   }
@@ -97,24 +99,31 @@ object Dedup {
       k: Int, threshold: Double, dfCap: Option[Long] = None,
       hotSalt: Option[(Long, Int)] = None): DataFrame = {
     val sets = docShingleSets(df, idCol, textCol, k).persist()
-    val (cands0, releasePrefix) = candidatesFromSets(sets, threshold, dfCap, hotSalt)
-    val cands = cands0.persist()
+    val prefix = prefixTable(sets, threshold, dfCap).persist()
+    val cands = Pins.persist(candidates(prefix, hotSalt))
     cands.count() // materialize while the set table is cached, then drop it
-    releasePrefix()
+    prefix.unpersist()
     sets.unpersist()
     cands
   }
 
-  /** Lazy PPJoin candidate plan over the cached (id, shs, sz) set
-    * table — the exploded shingle pairs, the document-frequency
+  /** Lazy PPJoin prefix plan (id, sh, df) over the cached (id, shs, sz)
+    * set table — the exploded shingle pairs, the document-frequency
     * aggregation, and the per-doc sizes all derive from it, so a single
     * downstream action fills one cache and every branch reuses it (no
     * second tokenization pass anywhere).
+    *
+    * Callers PERSIST it (r20): the prefix table feeds BOTH legs of the
+    * candidate self-join — and with hotSalt, both legs of the salted
+    * hot join too, FOUR computations of the explode+dfreq+window
+    * subtree in one plan (measured: the four duplicated map stages
+    * were ~45 s of the 100 s task time behind dedup_components_dist).
+    * One cache entry of prefix rows — a fraction of the shingle table
+    * by the prefix theorem — replaces three re-runs; the caller
+    * releases it right after its materializing action.
     */
-  private def candidatesFromSets(sets: DataFrame, threshold: Double,
-                                 dfCap: Option[Long],
-                                 hotSalt: Option[(Long, Int)] = None):
-      (DataFrame, () => Unit) = {
+  private def prefixTable(sets: DataFrame, threshold: Double,
+                          dfCap: Option[Long]): DataFrame = {
     val tok = sets.select(F.col("id"), F.explode(F.col("shs")).as("sh"))
     val sizes = sets.select(F.col("id"), F.col("sz"))
     val dfreq = tok.groupBy("sh").agg(F.count(F.lit(1)).as("df"))
@@ -124,17 +133,12 @@ object Dedup {
           .orderBy(F.col("df").asc, F.col("sh").asc)))
     val prefix0 = ranked.join(sizes, "id")
       .where(F.col("rk") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
-    // PERSISTED (r20): the prefix table feeds BOTH legs of the
-    // candidate self-join — and with hotSalt, both legs of the salted
-    // hot join too, FOUR computations of the explode+dfreq+window
-    // subtree in one plan (measured: the four duplicated map stages
-    // were ~45 s of the 100 s task time behind dedup_components_dist).
-    // One cache entry of (id, sh, df) prefix rows — a fraction of the
-    // shingle table by the prefix theorem — replaces three re-runs;
-    // the caller releases it right after its materializing action.
-    val prefix = dfCap.fold(prefix0)(cap => prefix0.where(F.col("df") <= cap))
+    dfCap.fold(prefix0)(cap => prefix0.where(F.col("df") <= cap))
       .select("id", "sh", "df")
-      .persist()
+  }
+
+  /** Candidate pairs (id1 < id2) from the persisted prefix table. */
+  private def candidates(prefix: DataFrame, hotSalt: Option[(Long, Int)]): DataFrame = {
     def candJoin(p: DataFrame): DataFrame =
       p.as("a").join(p.as("b"), Seq("sh"))
         .where(F.col("a.id") < F.col("b.id"))
@@ -160,7 +164,7 @@ object Dedup {
           .select("id1", "id2")
         candJoin(cold).unionAll(hotPairs)
     }
-    (cands.distinct(), () => { prefix.unpersist(); () })
+    cands.distinct()
   }
 
   /** Per-doc sorted shingle-hash set (id, shs, sz) — built per row
@@ -261,7 +265,7 @@ object Dedup {
     // parallelism-many near-empty task launches per round, a huge
     // graph still splits at ~1M rows/task
     val par = p.sparkSession.sparkContext.defaultParallelism
-    val pE = graft.operators.Pins.partsForRows(2 * nPairs, par)
+    val pE = Pins.partsForRows(2 * nPairs, par)
     // PINNED, not persisted (r20): a persisted edge frame keeps the
     // caller's ENTIRE pair-pipeline lineage in its logical plan, and
     // every round's action (cache fill + convergence probe + broadcast
@@ -276,7 +280,7 @@ object Dedup {
     // partitioning and every round's groupBy(a) runs exchange-free;
     // at the large end (labels not broadcast) the join re-shuffles
     // either way, so nothing is lost.
-    val edges = graft.operators.Pins.pin(
+    val edges = Pins.pin(
       p.select(F.col("id1").as("a"), F.col("id2").as("b"))
         .unionAll(p.select(F.col("id2").as("a"), F.col("id1").as("b")))
         .repartition(pE, F.col("a")))
@@ -287,7 +291,7 @@ object Dedup {
     // |labels| ≤ 2·nPairs bounds the broadcast decision by a measured
     // scalar, and big graphs fall back to the planner's choice
     def small(df: DataFrame): DataFrame =
-      if (2 * nPairs <= graft.operators.Pins.BroadcastRows) F.broadcast(df)
+      if (2 * nPairs <= Pins.BroadcastRows) F.broadcast(df)
       else df
     // cached: round 1 references the label frame on three join sides;
     // uncached, each side re-runs the node-distinct
@@ -358,12 +362,9 @@ object Dedup {
     // has a checkpoint dir (the cluster deployment), else an eager
     // localCheckpoint (single-JVM runs, where losing an executor
     // means losing the app anyway).
-    val pinned =
-      if (labels.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        labels.checkpoint()
-      else labels.localCheckpoint(true)
+    val pinned = Pins.pin(labels)
     cached.unpersist()
-    graft.operators.Pins.release(edges)
+    Pins.release(edges)
     done(pinned)
   }
 
@@ -766,8 +767,8 @@ object Dedup {
     // rows through the verify join
     val candDocs = corpus.join(candIds, F.col(idCol) === F.col("__cid"), "left_semi")
       .dropDuplicates(idCol)
-    val out = verifyJaccard(cands,
-      docShingleSets(candDocs, idCol, textCol, k), threshold).persist()
+    val out = Pins.persist(verifyJaccard(cands,
+      docShingleSets(candDocs, idCol, textCol, k), threshold))
     out.count()
     batchBanded.unpersist()
     cands.unpersist()
@@ -855,8 +856,8 @@ object Dedup {
           .where(F.col("a.id") < F.col("b.id"))
           .select(F.col("a.id").as("id1"), F.col("b.id").as("id2"))
           .distinct()
-        val out = verifyJaccard(cands, docShingleSets(df, idCol, textCol, k),
-          threshold).persist()
+        val out = Pins.persist(verifyJaccard(cands,
+          docShingleSets(df, idCol, textCol, k), threshold))
         out.count()
         banded.unpersist()
         out

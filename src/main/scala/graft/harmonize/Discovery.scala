@@ -1,5 +1,6 @@
 package graft.harmonize
 
+import graft.operators.{Par, Pins}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -60,35 +61,33 @@ object Discovery {
     * driver-literal pair list.
     */
   def inclusion(cols: Seq[(String, DataFrame, String)]): DataFrame =
-    inclusionReleasable(cols)._1
+    inclusionOf(cols, Pins.persist(distinctUnion(cols)))
 
-  /** [[inclusion]] plus a release handle that unpersists the pinned
-    * distinct-union frame (the Ranks.globalRankReleasable pattern):
-    * the plain overload leaves the cache for downstream reuse
-    * (Verify/Bench clear per query), but a long-lived session calling
-    * inclusion repeatedly accumulates a MEMORY_AND_DISK block per
-    * call until a clearCache — call the handle once the result is
-    * fully consumed.
+  /** The distinct (col, v) union [[inclusion]] self-joins. Callers
+    * persist it: it feeds BOTH sides of the self-join plus the
+    * per-column counts — without the pin the N distinct shuffles over
+    * the source tables run three times over. One SCAN per source frame
+    * (groupByFrame): a table's candidate columns explode out of a
+    * single pass — same distinct shuffle volume (map-side combine
+    * reduces per (col, v) either way), k× less I/O for a table with k
+    * candidates.
     */
-  def inclusionReleasable(
-      cols: Seq[(String, DataFrame, String)]): (DataFrame, () => Unit) = {
+  private def distinctUnion(cols: Seq[(String, DataFrame, String)]): DataFrame = {
     require(cols.size >= 2, "inclusion discovery needs at least two columns")
     require(cols.map(_._1).distinct.size == cols.size, "labels must be unique")
-    val spark = cols.head._2.sparkSession
-    // persisted: the distinct union feeds BOTH sides of the self-join
-    // plus the per-column counts — without the pin the N distinct
-    // shuffles over the source tables run three times over.
-    // One SCAN per source frame (groupByFrame): a table's candidate
-    // columns explode out of a single pass — same distinct shuffle
-    // volume (map-side combine reduces per (col, v) either way), k×
-    // less I/O for a table with k candidates
-    val d = groupByFrame(cols).map { case (df, cs) =>
+    groupByFrame(cols).map { case (df, cs) =>
       df.select(F.explode(F.array(cs.map { case (label, c) =>
           F.struct(F.lit(label).as("col"),
             F.col(c).cast("string").as("v")) }: _*)).as("s"))
         .select(F.col("s.col").as("col"), F.col("s.v").as("v"))
         .where(F.col("v").isNotNull).distinct()
-    }.reduce(_ unionAll _).persist()
+    }.reduce(_ unionAll _)
+  }
+
+  /** [[inclusion]] over the persisted distinct union `d`. */
+  private def inclusionOf(cols: Seq[(String, DataFrame, String)],
+                          d: DataFrame): DataFrame = {
+    val spark = d.sparkSession
     val counts = d.groupBy("col").agg(F.count(F.lit(1)).as("n_distinct"))
     val inter = d.as("a").join(d.as("b"), "v")
       .where(F.col("a.col") =!= F.col("b.col"))
@@ -100,7 +99,7 @@ object Discovery {
         names.flatMap(a => names.filter(_ != a).map(b => Row(a, b))), 1),
       StructType(Seq(StructField("src_col", StringType, nullable = false),
         StructField("tgt_col", StringType, nullable = false))))
-    val out = allPairs
+    allPairs
       .join(inter, Seq("src_col", "tgt_col"), "left")
       .na.fill(0L, Seq("n_inter"))
       .join(F.broadcast(counts.withColumnRenamed("col", "src_col")
@@ -110,7 +109,6 @@ object Discovery {
         F.round(F.col("n_inter").cast("double") / F.col("n_src").cast("double"), 6)
           .as("containment"),
         F.when(F.col("n_inter") === F.col("n_src"), 1).otherwise(0).as("is_ind"))
-    (out, () => { d.unpersist(true); () })
   }
 
   /** The 100 TB inclusion-discovery path, wired WITH its own error
@@ -165,8 +163,8 @@ object Discovery {
     // filter), so materialize its ~N² rows ONCE and release the
     // distinct-union cache inclusion() pins before the sketch side
     // runs; without the pin the self-join aggregation executes twice
-    val (exactRaw, release) = inclusionReleasable(cols)
-    val exactAll = exactRaw.persist()
+    val d = distinctUnion(cols).persist()
+    val exactAll = Pins.persist(inclusionOf(cols, d))
     val nByCol = exactAll.groupBy(F.col("src_col").as("c"))
       .agg(F.max("n_src").as("n"))
     val exact = exactAll
@@ -184,7 +182,7 @@ object Discovery {
     // — no (col, value) row explosion, no distinct shuffle, and a
     // table with k candidates costs one scan, not k. The shuffle
     // carries one row per frame.
-    val sk = groupByFrame(cols).map { case (df, cs) =>
+    val sk = Pins.persist(groupByFrame(cols).map { case (df, cs) =>
       // r21, two per-task-work fixes (guide §1.2 order-of-operations
       // step 2, measured ~10 µs/row before them): (1) the KMV/HLL
       // aggregate functions are imperative (no whole-stage codegen),
@@ -222,26 +220,16 @@ object Discovery {
       // KMV+HLL full-scan aggregate over every source table (the
       // query's dominant CPU) executed TWICE. The cache is one row
       // per column (|cols| rows of numHashes longs) — driver-small.
-    }.reduce(_ unionAll _).persist()
+    }.reduce(_ unionAll _))
     // materialize the two INDEPENDENT sides concurrently (r21, guide
     // §2.6 overlap independent jobs): the exact reference's
     // distinct/self-join chain and the sketch scans share no inputs
     // beyond the source tables, but the two blocking counts ran them
     // strictly back to back — the sketch stages now back-fill the
-    // cores the exact side's stage tails leave idle. Two driver
-    // threads, FIFO scheduling (the default back-fill behaviour).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    locally {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val sides = Seq(
-        scala.concurrent.Future { exactAll.count() },
-        scala.concurrent.Future { sk.count() })
-      sides.foreach(scala.concurrent.Await.result(_,
-        scala.concurrent.duration.Duration.Inf))
-    }
-    pool.shutdown()
-    release()
+    // cores the exact side's stage tails leave idle (FIFO scheduling,
+    // the default back-fill behaviour)
+    try Par.both(exactAll.count(), sk.count())
+    finally d.unpersist(true)
     // the Beyer et al. KMV Jaccard: with S = the k smallest of the
     // merged sketches (array set ops suffice — the sketches are
     // sorted sign-flipped, so signed order IS unsigned hash order),

@@ -1,5 +1,6 @@
 package graft.harmonize
 
+import graft.operators.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
@@ -126,10 +127,9 @@ object Profile {
     // walk, and the final fence count) — unpersisted, the unpivot +
     // per-value aggregate over the source ran three times over. Size
     // is the distinct (column, value) count, bounded well below the
-    // input. The Verify/Bench harnesses clear cache per query.
-    val counts = unpiv.groupBy("column", "v")
-      .agg(F.count(F.lit(1)).as("cnt"))
-      .persist()
+    // input.
+    val counts = Pins.persist(unpiv.groupBy("column", "v")
+      .agg(F.count(F.lit(1)).as("cnt")))
     val nstats = counts.groupBy("column").agg(F.sum("cnt").as("n"))
     val cum = counts.withColumn("cum",
       F.sum("cnt").over(Window.partitionBy("column").orderBy("v")
@@ -177,9 +177,8 @@ object Profile {
     // window/quartile chain and it feeds BOTH the fence-count
     // aggregate's broadcast and the final join's left side — two plan
     // instances of the chain without the pin
-    val fences = qs.select(F.col("column"), F.col("n"),
-      q1x.as("q1x"), q3x.as("q3x"), loFx.as("lofx"), hiFx.as("hifx"))
-      .persist()
+    val fences = Pins.persist(qs.select(F.col("column"), F.col("n"),
+      q1x.as("q1x"), q3x.as("q3x"), loFx.as("lofx"), hiFx.as("hifx")))
     val out = counts.join(F.broadcast(fences), "column")
       .groupBy("column").agg(
         F.sum(F.when(F.col("v") * 200 < F.col("lofx"), F.col("cnt"))
@@ -276,8 +275,7 @@ object Profile {
                         numHashes: Int = 1024, rsd: Double = 0.05,
                         tol: Double = 0.1): DataFrame = {
     // gate-only exact side: the distinct frame feeds three consumers
-    // un-pinned — the gate runs on gate-scale corpora only, and the
-    // wired harness clears caches per query anyway
+    // un-pinned — the gate runs on gate-scale corpora only
     val vals = df.select(F.col(groupCol).cast("string").as("g"),
         F.col(valueCol).cast("string").as("v"))
       .where(F.col("v").isNotNull)

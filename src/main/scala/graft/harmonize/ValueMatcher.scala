@@ -247,11 +247,9 @@ object ValueMatcher {
     // are persisted so the guard's eager pass (join + window per
     // side) is the SAME work the candidate join reuses — the guard
     // costs one extra counts-only aggregate, not a second window
-    // pass; ContextCleaner reclaims the blocks once the plan is GC'd.
-    val sigA = signature(ga)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigB = signature(gb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pass; the result reads them, so they go through Pins.persist.
+    val sigA = graft.operators.Pins.persist(signature(ga))
+    val sigB = graft.operators.Pins.persist(signature(gb))
     val dec = "decimal(38,0)"
     val fanLong = sigA.agg(
         F.coalesce(F.sum(F.col("__nb").cast(dec)), F.lit(0).cast(dec)).as("f"))

@@ -20,8 +20,8 @@ import org.apache.spark.sql.{functions => F}
   * Storage contract: every iterative op here returns an eagerly
   * PINNED frame (its lineage was truncated, so the blocks ARE the
   * data); intermediate rounds release via [[Pins.release]] as they
-  * go, and a long-lived caller should pass the returned frame to
-  * [[Pins.release]] too once fully consumed — plain
+  * go. The returned pin and every frame an operator persists for its
+  * result belong to the enclosing [[Pins.scoped]] block — plain
   * Dataset.unpersist() cannot reach a checkpoint's blocks.
   */
 object Graph {
@@ -184,7 +184,8 @@ object Graph {
     // skipped tiny-|V| graphs with many edges) and |S| (the teleport
     // mass denominator).
     val nsRow = nodes.agg(F.count(F.lit(1)).as("n"),
-      F.sum(F.when(F.col("is_seed"), 1L).otherwise(0L)).as("s")).head()
+      F.coalesce(F.sum(F.when(F.col("is_seed"), 1L).otherwise(0L)), F.lit(0L))
+        .as("s")).head()
     val n = nsRow.getLong(0)
     val s = nsRow.getLong(1)
     require(s > 0, "personalizedPageRank: no seed present in the graph")
@@ -268,19 +269,7 @@ object Graph {
     * driver round-trip. Returns (community, n_nodes, intra_edges,
     * degree_sum, q_num), |communities| rows, unordered.
     */
-  def modularity(pairs: DataFrame, communities: DataFrame): DataFrame =
-    modularityReleasable(pairs, communities)._1
-
-  /** [[modularity]] plus a release handle that unpersists the pinned
-    * canonical pair table (it feeds the doubled edge list twice, the
-    * m aggregate and the intra join — four occurrences in one plan).
-    * The triangleParticipationReleasable convention: the plain
-    * overload leaves the cache for downstream reuse (Verify/Bench
-    * clear per query); long-lived sessions call the handle once the
-    * |communities|-row result is consumed.
-    */
-  def modularityReleasable(pairs: DataFrame,
-                           communities: DataFrame): (DataFrame, () => Unit) = {
+  def modularity(pairs: DataFrame, communities: DataFrame): DataFrame = {
     // canonical-input normalization (r15): self-loops dropped, both
     // orientations + duplicates collapsed to one canonical (a<b) row —
     // so m, degrees and intra counts are well-defined for ANY input,
@@ -291,11 +280,10 @@ object Graph {
     // edge list (twice), the m aggregate and the intra join — four
     // occurrences of the distinct in one plan, each a full shuffle of
     // the input when unpersisted
-    val p = pairs.select(F.least(F.col("a"), F.col("b")).as("a"),
+    val p = Pins.persist(pairs.select(F.least(F.col("a"), F.col("b")).as("a"),
         F.greatest(F.col("a"), F.col("b")).as("b"))
       .where(F.col("a") =!= F.col("b"))
-      .distinct()
-      .persist()
+      .distinct())
     val e = p.unionAll(p.select(F.col("b").as("a"), F.col("a").as("b")))
     val mRow = p.agg(F.count(F.lit(1)).as("m"))
     val deg = e.groupBy(F.col("a").as("node")).agg(F.count(F.lit(1)).as("d"))
@@ -318,14 +306,13 @@ object Graph {
     val m19 = F.col("m").cast("decimal(19,0)")
     val intra19 = F.coalesce(F.col("intra_edges"), F.lit(0L)).cast("decimal(19,0)")
     val d19 = F.col("degree_sum").cast("decimal(19,0)")
-    val out = dc.join(intra, Seq("community"), "left")
+    dc.join(intra, Seq("community"), "left")
       .crossJoin(F.broadcast(mRow))
       .select(F.col("community"), F.col("n_nodes"),
         F.coalesce(F.col("intra_edges"), F.lit(0L)).as("intra_edges"),
         F.col("degree_sum"),
         (F.lit(4L).cast("decimal(19,0)") * m19 * intra19 - d19 * d19)
           .cast("long").as("q_num"))
-    (out, () => { p.unpersist(true); () })
   }
 
   /** Community detection by synchronous label propagation (Raghavan,
@@ -581,26 +568,14 @@ object Graph {
     * global sort.
     */
   def linkPrediction(pairs: DataFrame, maxPivotDegree: Int = 1000,
-                     k: Int = 100): DataFrame =
-    linkPredictionReleasable(pairs, maxPivotDegree, k)._1
-
-  /** [[linkPrediction]] plus a release handle for the pinned
-    * symmetrized edge list (it feeds the degree count, both candidate
-    * legs, and the adjacency anti-join — five references). The
-    * keywordsReleasable convention: the plain overload leaves the
-    * cache for downstream reuse (Verify/Bench clear per query);
-    * long-lived sessions call the handle once the k-row result is
-    * consumed.
-    */
-  def linkPredictionReleasable(pairs: DataFrame, maxPivotDegree: Int = 1000,
-                               k: Int = 100): (DataFrame, () => Unit) = {
+                     k: Int = 100): DataFrame = {
     require(maxPivotDegree >= 1 && k >= 1, "positive cap and k")
     // self-loops dropped: a looped node would otherwise pivot for its
     // own incident pairs and count ITSELF as a "common neighbor"
-    val e = pairs.select(F.col("a"), F.col("b"))
+    val e = Pins.persist(pairs.select(F.col("a"), F.col("b"))
       .unionAll(pairs.select(F.col("b").as("a"), F.col("a").as("b")))
       .where(F.col("a") =!= F.col("b"))
-      .distinct().persist()
+      .distinct())
     val deg = e.groupBy(F.col("a").as("node")).agg(F.count(F.lit(1)).as("deg"))
     val byPivot = e.select(F.col("a").as("w"), F.col("b").as("n"))
       .join(deg.where(F.col("deg") <= maxPivotDegree)
@@ -609,7 +584,7 @@ object Graph {
         F.col("x.w") === F.col("y.w") && F.col("x.n") < F.col("y.n"))
       .groupBy(F.col("x.n").as("a"), F.col("y.n").as("b"))
       .agg(F.count(F.lit(1)).as("cn"))
-    val out = cand
+    cand
       .join(e.where(F.col("a") < F.col("b")), Seq("a", "b"), "left_anti")
       .join(deg.select(F.col("node").as("a"), F.col("deg").as("deg_a")), "a")
       .join(deg.select(F.col("node").as("b"), F.col("deg").as("deg_b")), "b")
@@ -619,7 +594,6 @@ object Graph {
       .orderBy(F.col("cn").desc, F.col("pa").desc,
         F.col("a").asc, F.col("b").asc)
       .limit(k)
-    (out, () => { e.unpersist(true); () })
   }
 
   /** Integer-scaled 1/ln(d) lookup for Adamic-Adar (Adamic & Adar,
@@ -650,19 +624,12 @@ object Graph {
     * (a, b, cn, pa, aa_num).
     */
   def linkPredictionAA(pairs: DataFrame, maxPivotDegree: Int = 1000,
-                       k: Int = 100, aaScale: Long = 1000000L): DataFrame =
-    linkPredictionAAReleasable(pairs, maxPivotDegree, k, aaScale)._1
-
-  /** [[linkPredictionAA]] plus a release handle for the pinned
-    * symmetrized edge list — the linkPredictionReleasable convention.
-    */
-  def linkPredictionAAReleasable(pairs: DataFrame, maxPivotDegree: Int = 1000,
-      k: Int = 100, aaScale: Long = 1000000L): (DataFrame, () => Unit) = {
+                       k: Int = 100, aaScale: Long = 1000000L): DataFrame = {
     require(maxPivotDegree >= 2 && k >= 1, "cap >= 2 and positive k")
-    val e = pairs.select(F.col("a"), F.col("b"))
+    val e = Pins.persist(pairs.select(F.col("a"), F.col("b"))
       .unionAll(pairs.select(F.col("b").as("a"), F.col("a").as("b")))
       .where(F.col("a") =!= F.col("b"))
-      .distinct().persist()
+      .distinct())
     val deg = e.groupBy(F.col("a").as("node")).agg(F.count(F.lit(1)).as("deg"))
     val tbl = F.typedlit(aaTable(maxPivotDegree, aaScale)
       .map { case (d, v) => d.toLong -> v }.toMap)
@@ -674,7 +641,7 @@ object Graph {
         F.col("x.w") === F.col("y.w") && F.col("x.n") < F.col("y.n"))
       .groupBy(F.col("x.n").as("a"), F.col("y.n").as("b"))
       .agg(F.count(F.lit(1)).as("cn"), F.sum(F.col("x.aaw")).as("aa_num"))
-    val out = cand
+    cand
       .join(e.where(F.col("a") < F.col("b")), Seq("a", "b"), "left_anti")
       .join(deg.select(F.col("node").as("a"), F.col("deg").as("deg_a")), "a")
       .join(deg.select(F.col("node").as("b"), F.col("deg").as("deg_b")), "b")
@@ -685,7 +652,6 @@ object Graph {
       .orderBy(F.col("aa_num").desc, F.col("cn").desc, F.col("pa").desc,
         F.col("a").asc, F.col("b").asc)
       .limit(k)
-    (out, () => { e.unpersist(true); () })
   }
 
   /** Degree-ordered orientation of an undirected canonical pair list
@@ -735,18 +701,7 @@ object Graph {
     * call sites can still pre-filter low-support edges (the wired
     * query keeps co-occurrence ≥ 2).
     */
-  def triangleParticipation(pairs: DataFrame): DataFrame =
-    triangleParticipationReleasable(pairs)._1
-
-  /** [[triangleParticipation]] plus a release handle that unpersists
-    * the two pinned frames (oriented edges feed three join legs; the
-    * triangle list feeds three projections). The plain overload
-    * leaves the caches for downstream reuse (Verify/Bench clear per
-    * query); long-lived sessions should call the handle once the
-    * result is consumed — the globalRankReleasable convention.
-    */
-  def triangleParticipationReleasable(
-      pairs: DataFrame): (DataFrame, () => Unit) = {
+  def triangleParticipation(pairs: DataFrame): DataFrame = {
     // persist the undirected input once (r20): orientByDegree
     // references it FIVE times in one plan (twice per degree-join leg
     // plus the edge list itself), so an unpersisted upstream — e.g.
@@ -758,9 +713,9 @@ object Graph {
     val alreadyCached =
       pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val und = if (alreadyCached) pairs
-      else pairs.select(F.col("a"), F.col("b")).persist()
-    val e = orientByDegree(und).persist()
-    val tri = e.as("e1")
+      else Pins.persist(pairs.select(F.col("a"), F.col("b")))
+    val e = Pins.persist(orientByDegree(und))
+    val tri = Pins.persist(e.as("e1")
       .join(e.as("e2"),
         F.col("e1.src") === F.col("e2.src") &&
           (F.struct(F.col("e1.ddeg"), F.col("e1.dst")) <
@@ -768,19 +723,11 @@ object Graph {
       .join(e.as("e3"),
         F.col("e1.dst") === F.col("e3.src") && F.col("e2.dst") === F.col("e3.dst"))
       .select(F.col("e1.src").as("x"), F.col("e1.dst").as("y"),
-        F.col("e2.dst").as("z"))
-      .persist()
-    val out = tri.select(F.col("x").as("node"))
+        F.col("e2.dst").as("z")))
+    tri.select(F.col("x").as("node"))
       .unionAll(tri.select(F.col("y").as("node")))
       .unionAll(tri.select(F.col("z").as("node")))
       .groupBy("node").agg(F.count(F.lit(1)).as("n_triangles"))
-    // blocking unpersist: the release promise is "no blocks remain",
-    // not "blocks will eventually go" — callers (and the spec) may
-    // check immediately
-    (out, () => {
-      if (!alreadyCached) und.unpersist(true)
-      e.unpersist(true); tri.unpersist(true); ()
-    })
   }
 
   /** Per-node LOCAL clustering coefficient (Watts & Strogatz '98)
@@ -795,26 +742,17 @@ object Graph {
     * report lcc 0, degree-1 nodes are excluded (the coefficient is
     * undefined, not zero). Returns (node, deg, n_triangles, lcc_ppm).
     */
-  def clusteringCoefficient(pairs: DataFrame): DataFrame =
-    clusteringCoefficientReleasable(pairs)._1
-
-  /** [[clusteringCoefficient]] plus a release handle covering BOTH its
-    * own pinned undirected copy and the triangle pass's pinned frames
-    * (oriented edges + triangle list) — the
-    * triangleParticipationReleasable convention, composed.
-    */
-  def clusteringCoefficientReleasable(
-      pairs: DataFrame): (DataFrame, () => Unit) = {
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
     // ONE persisted copy of the undirected input shared between the
     // degree count here and the triangle pass (which sees it already
     // cached and does not re-persist) — unpersisted, the upstream pair
-    // builder ran ~7x in one plan (see triangleParticipationReleasable)
-    val und = pairs.select(F.col("a"), F.col("b")).persist()
+    // builder ran ~7x in one plan (see triangleParticipation)
+    val und = Pins.persist(pairs.select(F.col("a"), F.col("b")))
     val deg = und.select(F.col("a").as("node"))
       .unionAll(und.select(F.col("b").as("node")))
       .groupBy("node").agg(F.count(F.lit(1)).as("deg"))
-    val (tri, triRelease) = triangleParticipationReleasable(und)
-    val out = deg.where(F.col("deg") >= 2)
+    val tri = triangleParticipation(und)
+    deg.where(F.col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(F.col("node"), F.col("deg"),
         F.coalesce(F.col("n_triangles"), F.lit(0L)).as("n_triangles"),
@@ -823,6 +761,5 @@ object Graph {
           "CAST(1000000 AS DECIMAL(38,0))) div " +
           "(CAST(deg AS DECIMAL(38,0)) * CAST(deg - 1 AS DECIMAL(38,0))) " +
           "AS BIGINT)").as("lcc_ppm"))
-    (out, () => { triRelease(); und.unpersist(true); () })
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.DynamicVariable
+
 /** Lineage pinning for iterative loops — one shared implementation of
   * the per-round checkpoint/localCheckpoint pattern (the pageRank
   * plan-explosion fix) PLUS its missing half: deterministic release.
@@ -16,8 +19,42 @@ import org.apache.spark.sql.execution.LogicalRDD
   * iterative loop (5-8 rounds before any GC) easily outruns. At
   * cluster scale that is `rounds × |frontier|` of dead blocks
   * competing with the live working set.
+  *
+  * Lifetime: a frame pinned or persisted by an operator and still
+  * held by its result (a pinned final round, a cached pair table)
+  * belongs to the innermost open [[scoped]] block, which releases it
+  * on exit — normal or exceptional. Outside any scope such frames
+  * stay cached for downstream reuse, as `persist()` leaves them.
   */
 object Pins {
+
+  /** Release actions recorded by the innermost open scope. Threads
+    * started inside a scope inherit it (DynamicVariable is
+    * inheritable), so recording synchronizes on the buffer.
+    */
+  private val scope = new DynamicVariable[Option[ArrayBuffer[() => Unit]]](None)
+
+  private def record(df: DataFrame)(free: DataFrame => Unit): DataFrame = {
+    scope.value.foreach(s => s.synchronized(s += (() => free(df))))
+    df
+  }
+
+  /** Run `body`, then release every frame [[pin]] and [[persist]]
+    * recorded while it ran (newest first), also when it throws. Scopes
+    * nest: an inner scope releases only its own frames. A result that
+    * reads a released frame recomputes it or, for a pin, fails — so
+    * consume results inside the scope.
+    */
+  def scoped[T](body: => T): T = {
+    val frees = ArrayBuffer.empty[() => Unit]
+    scope.withValue(Some(frees)) {
+      try body
+      finally frees.synchronized(frees.reverseIterator.foreach(_()))
+    }
+  }
+
+  /** `df.persist()` (MEMORY_AND_DISK), recorded in the open scope. */
+  def persist(df: DataFrame): DataFrame = record(df.persist())(_.unpersist())
 
   /** Row-count-derived partition count for iterative support frames
     * (optimization guide §2: derive partitioning from measured input
@@ -58,9 +95,9 @@ object Pins {
     * logical plan doubles every iteration even though execution reads
     * the cache.
     */
-  def pin(df: DataFrame): DataFrame =
+  def pin(df: DataFrame): DataFrame = record(
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint(true)
+    else df.localCheckpoint(true))(release)
 
   /** Release a pinned (or persisted) frame's storage NOW. Walks the
     * analyzed plan for `LogicalRDD` leaves and unpersists their

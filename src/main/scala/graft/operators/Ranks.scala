@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.storage.StorageLevel
 
 /** Exact global rank at scale.
   *
@@ -42,9 +41,9 @@ import org.apache.spark.storage.StorageLevel
   * bit-for-bit with what `Window.orderBy(order)` would have produced.
   *
   * The persisted intermediate (the ranked input, narrow by
-  * construction at the call sites) stays cached for downstream reuse;
-  * Verify/Bench clear the cache per query, and a long-lived session
-  * can `spark.catalog.clearCache()` when done.
+  * construction at the call sites) goes through [[Pins.persist]]: an
+  * enclosing [[Pins.scoped]] releases it, otherwise it stays cached for
+  * downstream reuse.
   */
 object Ranks {
 
@@ -56,28 +55,13 @@ object Ranks {
     * parallelism.
     */
   def globalRank(df: DataFrame, order: Seq[Column],
-                 rankCol: String = "rnk", parts: Int = 0): DataFrame =
-    globalRankReleasable(df, order, rankCol, parts)._1
-
-  /** [[globalRank]] plus a release handle that unpersists the pinned
-    * intermediate. The plain overload leaves the cache for downstream
-    * reuse (Verify/Bench clear per query); a long-lived session making
-    * repeated calls should use this variant and call the handle once
-    * the result is fully consumed — otherwise each call accumulates a
-    * MEMORY_AND_DISK copy of its ranked input until a clearCache.
-    * Calling the handle before consumption is safe (the frame
-    * recomputes through its own lineage) but forfeits the layout pin,
-    * so don't.
-    */
-  def globalRankReleasable(df: DataFrame, order: Seq[Column],
-                 rankCol: String = "rnk", parts: Int = 0): (DataFrame, () => Unit) = {
+                 rankCol: String = "rnk", parts: Int = 0): DataFrame = {
     require(order.nonEmpty, "globalRank needs at least one order column")
     val p0 = if (parts > 0) parts
              else math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
-    val stamped = df.repartitionByRange(p0, order: _*)
+    val stamped = Pins.persist(df.repartitionByRange(p0, order: _*)
       .sortWithinPartitions(order: _*)
-      .withColumn("__gr_mid", F.monotonically_increasing_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__gr_mid", F.monotonically_increasing_id()))
     val pid = F.shiftrightunsigned(F.col("__gr_mid"), 33)
     // p rows after map-side partial aggregation — driver-small. The
     // counts group on spark_partition_id (the TRUE partition ordinal),
@@ -112,10 +96,9 @@ object Ranks {
     val offExpr =
       if (offsets.isEmpty) F.lit(0L)
       else F.coalesce(F.element_at(F.typedlit(offsets), pid), F.lit(0L))
-    val out = stamped
+    stamped
       .withColumn(rankCol,
         offExpr + F.col("__gr_mid").bitwiseAND(F.lit(Low33Mask)) + F.lit(1L))
       .drop("__gr_mid")
-    (out, () => { stamped.unpersist(true); () })
   }
 }

@@ -236,7 +236,7 @@ object Ann {
           .where(F.col("a.id") < F.col("b.id"))
           .select(F.col("a.id").as("id1"), F.col("b.id").as("id2"))
           .distinct()
-        val out = verified(cands).persist()
+        val out = graft.operators.Pins.persist(verified(cands))
         out.count()
         banded.unpersist()
         out
@@ -1404,10 +1404,10 @@ object Ann {
     * set into the scan). cellCap applies to the COMBINED cell
     * occupancy, mirroring the inline operator.
     *
-    * The result is returned PERSISTED and already materialized;
-    * callers fully done with it must unpersist() it (as
-    * StreamingDedup.semanticIngest does per micro-batch — the wired
-    * driver harnesses instead clearCache() between queries).
+    * The result is returned PERSISTED (through Pins.persist) and
+    * already materialized; callers fully done with it unpersist() it
+    * (as StreamingDedup.semanticIngest does per micro-batch) or let an
+    * enclosing Pins.scoped release it.
     */
   def semanticIngestPairs(incoming: DataFrame, existing: DataFrame,
                           existingCells: DataFrame,
@@ -1455,11 +1455,10 @@ object Ann {
       .persist()
     val v1 = candVecs.select(F.col("__vid").as("id1"), F.col("__v").as("v1"))
     val v2 = candVecs.select(F.col("__vid").as("id2"), F.col("__v").as("v2"))
-    val out = cands.join(v1, "id1").join(v2, "id2")
+    val out = graft.operators.Pins.persist(cands.join(v1, "id1").join(v2, "id2")
       .withColumn("sim", cosine(F.col("v1"), F.col("v2")))
       .where(F.col("sim") >= threshold)
-      .select(F.col("id1"), F.col("id2"), F.round(F.col("sim"), 6).as("similarity"))
-      .persist()
+      .select(F.col("id1"), F.col("id2"), F.round(F.col("sim"), 6).as("similarity")))
     out.count()
     batchCells.unpersist()
     cands.unpersist()

@@ -220,9 +220,10 @@ object Events {
     // to raw events) so the k-1 stage scans hit the cached projection
     // exactly once, then release it — long-lived sessions calling
     // funnel() repeatedly must not accumulate cached partitions.
-    // Result is returned PERSISTED; callers fully done with it may
-    // unpersist() (same contract as jaccardPairs/minhashPairs).
-    val out = full.withColumn("steps_completed", completed.cast("int")).persist()
+    // Result is returned PERSISTED through Pins.persist (same
+    // contract as jaccardPairs).
+    val out = graft.operators.Pins.persist(
+      full.withColumn("steps_completed", completed.cast("int")))
     out.count()
     e.unpersist()
     out

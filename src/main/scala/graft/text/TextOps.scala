@@ -159,27 +159,15 @@ object TextOps {
     * map-side). Nothing is ever corpus × corpus.
     */
   def keywords(df: DataFrame, idCol: String, textCol: String,
-               k: Int = 3): DataFrame =
-    keywordsReleasable(df, idCol, textCol, k)._1
-
-  /** [[keywords]] plus a release handle that unpersists the pinned
-    * (doc, term, tf) aggregate (the inclusionReleasable pattern): the
-    * plain overload leaves the cache for downstream reuse
-    * (Verify/Bench clear per query), but a long-lived session calling
-    * keywords repeatedly accumulates a MEMORY_AND_DISK block per call
-    * until a clearCache — call the handle once the result is fully
-    * consumed.
-    */
-  def keywordsReleasable(df: DataFrame, idCol: String, textCol: String,
-                         k: Int = 3): (DataFrame, () => Unit) = {
+               k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = df.select(F.col(idCol).as("doc_id"),
         F.explode(tokens(F.col(textCol))).as("term"))
     // persisted: the tf aggregate feeds BOTH the per-doc scores and
     // the term-keyed df rollup — without the pin the tokenize+explode
     // corpus scan runs twice
-    val tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).as("tf"))
-      .persist()
+    val tf = graft.operators.Pins.persist(
+      tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).as("df"))
     val nDocs = df.agg(F.count(F.lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, "term")
@@ -190,10 +178,9 @@ object TextOps {
             (F.col("df").cast("double") + F.lit(1.0))), 9).as("score"))
     val w = Window.partitionBy("doc_id")
       .orderBy(F.col("score").desc, F.col("term").asc)
-    val out = scored.withColumn("rank", F.row_number().over(w))
+    scored.withColumn("rank", F.row_number().over(w))
       .where(F.col("rank") <= k)
       .select("doc_id", "term", "score", "rank")
-    (out, () => { tf.unpersist(true); () })
   }
 
   /** Fused single-pass document profile: quality stats, language ID,

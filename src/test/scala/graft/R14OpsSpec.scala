@@ -75,19 +75,16 @@ class R14OpsSpec extends SparkSpec {
     assert(t == Map("a01" -> 1L, "a02" -> 1L, "m" -> 1L))
   }
 
-  test("triangles: releasable handle leaves no cache growth across calls") {
-    import graft.operators.Graph
+  test("triangles: Pins.scoped leaves no cache growth across calls") {
+    import graft.operators.{Graph, Pins}
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     // compare id SETS, not sizes: the shared-JVM ContextCleaner may
     // concurrently drop OTHER suites' entries mid-test
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    for (_ <- 1 to 2) {
-      val (out, release) = Graph.triangleParticipationReleasable(pairs)
-      assert(out.count() == 3)
-      release()
-    }
+    for (_ <- 1 to 2)
+      assert(Pins.scoped(Graph.triangleParticipation(pairs).count()) == 3)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"released triangle pins must not accumulate: $leaked")
+    assert(leaked.isEmpty, s"scoped triangle pins must not accumulate: $leaked")
   }
 
   test("iterative graph rounds release their pins (only final frames stay)") {
@@ -246,41 +243,31 @@ class R14OpsSpec extends SparkSpec {
     //   (1,5)/(3,5): common {4} cn=1, pa=2*1=2, tie -> a asc
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L))
       .toDF("a", "b")
-    val (out, release) = Graph.linkPredictionReleasable(pairs,
-      maxPivotDegree = 10, k = 10)
-    val got = out.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.toSeq == Seq((2L, 4L, 2L, 6L), (1L, 3L, 2L, 4L),
+    def scored(p: org.apache.spark.sql.DataFrame, cap: Int) =
+      graft.operators.Pins.scoped(Graph.linkPrediction(p, maxPivotDegree = cap, k = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = scored(pairs, 10)
+    assert(got == Seq((2L, 4L, 2L, 6L), (1L, 3L, 2L, 4L),
       (1L, 5L, 1L, 2L), (3L, 5L, 1L, 2L)))
-    release()
     // cap 2 excludes pivot 4 (deg 3): (2,4) keeps its cn via pivots
     // 1 and 3; (1,3) drops to cn 1 (pivot 2 only); the pendant pairs
     // existed only through the excluded hub
-    val (capped, release2) = Graph.linkPredictionReleasable(pairs,
-      maxPivotDegree = 2, k = 10)
-    val g2 = capped.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(g2.toSeq == Seq((2L, 4L, 2L, 6L), (1L, 3L, 1L, 4L)))
-    release2()
+    assert(scored(pairs, 2) == Seq((2L, 4L, 2L, 6L), (1L, 3L, 1L, 4L)))
     // a self-loop must not let its node count itself as a common
     // neighbor of its own incident pairs (or inflate degrees)
-    val (looped, release3) = Graph.linkPredictionReleasable(
-      pairs.unionAll(Seq((4L, 4L)).toDF("a", "b")),
-      maxPivotDegree = 10, k = 10)
-    val g3 = looped.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(g3.toSeq == got.toSeq)
-    release3()
+    assert(scored(pairs.unionAll(Seq((4L, 4L)).toDF("a", "b")), 10) == got)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"scoped edge-list pins must not accumulate: $leaked")
   }
 
-  test("keywordsReleasable: handle releases the internal tf pin") {
+  test("keywords: Pins.scoped releases the internal tf pin") {
+    import graft.operators.Pins
     import graft.text.TextOps
     val docs = Seq((1L, "alpha beta beta gamma"), (2L, "alpha delta"))
       .toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (out, release) = TextOps.keywordsReleasable(docs, "doc_id", "text", 2)
-    assert(out.count() == 4)
-    release()
+    assert(Pins.scoped(TextOps.keywords(docs, "doc_id", "text", 2).count()) == 4)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"released keyword pins must not accumulate: $leaked")
   }
@@ -476,16 +463,15 @@ class R14OpsSpec extends SparkSpec {
     assert(gate.size == 3 && gate.values.forall(_ == ((true, true, true))), s"$gate")
   }
 
-  test("inclusionReleasable: handle releases the pinned distinct union") {
+  test("inclusion: Pins.scoped releases the pinned distinct union") {
     import graft.harmonize.Discovery
+    import graft.operators.Pins
     val a = Seq("x", "y", "z").toDF("v")
     val b = Seq("x", "y").toDF("v")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (out, release) = Discovery.inclusionReleasable(
-      Seq(("A", a, "v"), ("B", b, "v")))
-    val m = out.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
+    val m = Pins.scoped(Discovery.inclusion(Seq(("A", a, "v"), ("B", b, "v")))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap)
     assert(m(("B", "A")) == 2L && m(("A", "B")) == 2L)
-    release()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"released inclusion pin must not accumulate: $leaked")
   }

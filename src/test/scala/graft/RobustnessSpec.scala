@@ -347,6 +347,20 @@ class RobustnessSpec extends SparkSpec {
     assert(noDim.length == 1 && noDim(0).isNullAt(3))
   }
 
+  test("graph ranks: an empty edge list is a documented IllegalArgumentException") {
+    import graft.operators.Graph
+    val noEdges = Seq.empty[(String, String, Long)].toDF("src", "dst", "w")
+    val seeds = Seq("a").toDF("node")
+    // the seed sum over zero nodes is null, not 0: reading it raw was
+    // an NPE before the require could name the problem
+    val ppr = intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(noEdges, seeds).collect()
+    }
+    assert(ppr.getMessage.contains("no seed present"), ppr.getMessage)
+    val pr = intercept[IllegalArgumentException](Graph.pageRank(noEdges).collect())
+    assert(pr.getMessage.contains("empty edge list"), pr.getMessage)
+  }
+
   test("property: AsOfJoin both directions equal brute force on random data (seeded)") {
     import graft.operators.AsOfJoin
     val rnd = new Random(17)
