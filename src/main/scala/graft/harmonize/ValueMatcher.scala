@@ -154,46 +154,59 @@ object ValueMatcher {
   }
 
   /** EXACT edit-distance similarity JOIN — all (source, target) value
-    * pairs with levenshtein ≤ k — via q-gram PREFIX filtering (the
-    * SSJoin/EDJoin family: Chaudhuri et al. ICDE'06, Xiao et al.
-    * VLDB'08). This is the scale path [[editDistanceMatch]] lacks:
-    * that operator broadcasts the target domain (the value-matching
-    * contract), while here NEITHER domain needs to fit anywhere —
-    * candidates come from equi-joins on rare grams.
+    * pairs with levenshtein ≤ k. The candidate plan is chosen per call
+    * from counts: q-gram PREFIX filtering (the SSJoin/EDJoin family:
+    * Chaudhuri et al. ICDE'06, Xiao et al. VLDB'08) where it prunes,
+    * else a length-band equi-join over the whole domains. This is the
+    * scale path [[editDistanceMatch]] lacks: that operator broadcasts
+    * the target domain (the value-matching contract), while here
+    * NEITHER domain needs to fit anywhere — candidates come from
+    * equi-joins only.
     *
-    * Why it is exact: one edit destroys at most q of a string's
-    * distinct q-grams, so ed(a,b) ≤ k ⇒ |G(a)\G(b)| ≤ q·k — among ANY
-    * q·k+1 grams of a, at least one also occurs in b (pigeonhole).
-    * Each value's SIGNATURE is therefore its q·k+1 rarest grams
-    * (rare-first in one GLOBAL df order over both domains — rarity is
-    * pure efficiency, any fixed choice is correct), and the candidate
-    * set is signature(source) ⋈ allGrams(target) ∪
-    * allGrams(source) ⋈ signature(target): the second direction
-    * covers sources too short to carry q·k+1 grams paired with long
-    * targets (the pigeonhole then fires from the target side). Pairs
-    * where BOTH sides are short (< q·(k+1) chars — too few grams for
-    * the bound anywhere) pair through a (2k+1)-key length-band
-    * equi-join over the short buckets only. Every candidate verifies
-    * with a real levenshtein ≤ k — no approximation anywhere.
+    * Why the prefix plan is exact: one edit destroys at most q of a
+    * string's distinct q-grams, so ed(a,b) ≤ k ⇒ |G(a)\G(b)| ≤ q·k —
+    * among ANY q·k+1 grams of a, at least one also occurs in b
+    * (pigeonhole). Each value's SIGNATURE is therefore its q·k+1 rarest
+    * grams (rare-first in one GLOBAL df order over both domains —
+    * rarity is pure efficiency, any fixed choice is correct), and the
+    * candidate set is signature(source) ⋈ allGrams(target) ∪
+    * allGrams(source) ⋈ signature(target): the second direction covers
+    * sources too short to carry q·k+1 grams paired with long targets
+    * (the pigeonhole then fires from the target side). Pairs where
+    * BOTH sides are short (< q·(k+1) chars — too few grams for the
+    * bound anywhere) pair through a (2k+1)-key length-band equi-join
+    * over the short buckets only. The length-band plan is exact
+    * because ed(a,b) ≥ ||a| − |b||: it pairs every source value with
+    * every target value whose length is within k. Either way every
+    * candidate verifies with a real levenshtein ≤ k — no approximation
+    * anywhere, and the two plans return identical results.
     *
-    * Scale shape: join keys on the filtered path are SIGNATURE grams,
+    * Scale shape: join keys on the prefix plan are SIGNATURE grams,
     * rare by construction (hot grams — shared prefixes, common words —
     * are exactly what the global order pushes OUT of signatures), so
     * posting lists stay short where naive gram joins go quadratic on
-    * near-identical corpora; AQE's skew split covers residue. The
-    * honest bound is candidates ≤ Σ_signature grams df(g): gram
-    * filtering assumes a Zipfian gram universe (natural text) — on a
-    * TINY alphabet (digit-only ids, codes) every gram is hot, posting
-    * lists grow linearly with the corpus, and candidates (like the
-    * true answer on such data) go quadratic; slice or block such
-    * columns first, exactly as the wired gate does. That bound is
-    * ENFORCED, not just documented (r18): counts-only aggregates
-    * estimate Σ df(signature grams) plus the short-band census
-    * BEFORE any candidate is generated, and the plan refuses loudly
-    * above `maxCandidates` (caller-bounded budget, the Linkage
-    * block-pair guard pattern). Output:
-    * (source, target, lev), source ≠ target, both directions of a
-    * self-join present (filter source < target for unordered pairs).
+    * near-identical corpora; AQE's skew split covers residue. That
+    * holds on a Zipfian gram universe (natural text). On a small
+    * alphabet (ids such as `Customer#000000123`, digit codes) every
+    * value shares its hot grams, so each signature still carries
+    * grams held by the whole domain and the prefix plan emits more
+    * candidate rows than the length band — often more than the cross
+    * product, before its `distinct`. Both plans' candidate counts are
+    * known exactly before any candidate is generated: the prefix plan
+    * emits Σ df(signature grams) (each signature gram's opposite-side
+    * posting count) plus the both-short band census, the band plan
+    * emits Σ_{|la−lb|≤k} ca·cb over the two domains' length histograms.
+    * The cheaper one runs; on a tie the band plan runs, since it needs
+    * no union and no `distinct` (each pair occurs once).
+    *
+    * Budget: `maxCandidates` bounds the count of the plan that runs,
+    * and the call refuses loudly above it (caller-bounded budget, the
+    * Linkage block-pair guard pattern) BEFORE any candidate row is
+    * generated. On data where even the cheaper plan is quadratic
+    * (large single-length id domains — where the true answer often is
+    * too), slice or block the column first. Output: (source, target,
+    * lev), source ≠ target, both directions of a self-join present
+    * (filter source < target for unordered pairs).
     */
   def editDistanceJoin(source: DataFrame, sourceCol: String,
                        target: DataFrame, targetCol: String,
@@ -218,7 +231,7 @@ object ValueMatcher {
     // one GLOBAL gram order shared by both sides, with per-side
     // posting counts kept: the candidate fan-out of a side-A
     // signature gram is its SIDE-B posting count (and vice versa),
-    // which is what the budget guard below sums
+    // which is what the plan choice below sums
     val df = ga.select(F.col("gram"), F.lit(1).as("__sa"))
       .unionAll(gb.select(F.col("gram"), F.lit(0).as("__sa")))
       .groupBy("gram")
@@ -234,75 +247,78 @@ object ValueMatcher {
         .where(F.col("__rn") <= sigLen)
         .select("v", "gram", "__na", "__nb")
     }
-    // LOUD CANDIDATE-BUDGET GUARD (r18; the Linkage block-pair guard
-    // pattern): the honest cost bound of this operator is
-    // Σ df(signature grams) — on a TINY alphabet (digit-only ids,
-    // codes) every gram is hot and that sum (like the true answer on
-    // such data) goes quadratic in the domain. Estimate it with
-    // counts-only aggregates BEFORE any candidate row is generated
-    // and refuse over budget: the join fan-out of each signature gram
-    // is exactly its opposite-side posting count, and the both-short
-    // arm contributes the length-band census product. Decimal sums —
-    // a quadratic blowup must refuse, not wrap. The signature frames
-    // are persisted so the guard's eager pass (join + window per
-    // side) is the SAME work the candidate join reuses — the guard
-    // costs one extra counts-only aggregate, not a second window
-    // pass; the result reads them, so they go through Pins.persist.
+    // PLAN CHOICE + LOUD CANDIDATE-BUDGET GUARD, from counts-only
+    // passes BEFORE any candidate row is generated. The signature
+    // frames are persisted so the fan-out pass (join + window per side)
+    // is the SAME work the prefix plan's candidate join reuses; the
+    // prefix result reads them, so they go through Pins.persist, and
+    // every other exit unpersists them. Decimal sums — a quadratic
+    // count must refuse, not wrap.
     val sigA = graft.operators.Pins.persist(signature(ga))
     val sigB = graft.operators.Pins.persist(signature(gb))
     val dec = "decimal(38,0)"
-    val fanLong = sigA.agg(
+    val fanLong = BigDecimal(sigA.agg(
         F.coalesce(F.sum(F.col("__nb").cast(dec)), F.lit(0).cast(dec)).as("f"))
       .unionAll(sigB.agg(
         F.coalesce(F.sum(F.col("__na").cast(dec)), F.lit(0).cast(dec)).as("f")))
-      .agg(F.sum(F.col("f")).as("f")).head().getDecimal(0)
-    val la = va.where(F.length(F.col("v")) < shortLen)
-      .groupBy(F.length(F.col("v")).as("l")).agg(F.count(F.lit(1)).as("ca"))
-    val lb = vb.where(F.length(F.col("v")) < shortLen)
-      .groupBy(F.length(F.col("v")).as("lb")).agg(F.count(F.lit(1)).as("cb"))
-    val fanShortRow = la.join(lb,
-        F.abs(F.col("l") - F.col("lb")) <= k, "inner")
-      .agg(F.coalesce(F.sum(F.col("ca").cast(dec) * F.col("cb").cast(dec)),
-        F.lit(0).cast(dec)).as("f")).head()
-    val fanShort = if (fanShortRow.isNullAt(0))
-      java.math.BigDecimal.ZERO else fanShortRow.getDecimal(0)
-    val estimate = fanLong.add(fanShort)
-    if (estimate.compareTo(
-        java.math.BigDecimal.valueOf(maxCandidates)) > 0) {
+      .agg(F.sum(F.col("f")).as("f")).head().getDecimal(0))
+    // both domains' length histograms in one collect (a few rows: one
+    // per distinct length); both censuses fold from it on the driver
+    val hist = va.select(F.lit(true).as("__a"), F.length(F.col("v")).as("l"))
+      .unionAll(vb.select(F.lit(false).as("__a"), F.length(F.col("v")).as("l")))
+      .groupBy("__a", "l").count()
+      .collect().map(r => (r.getBoolean(0), r.getInt(1), r.getLong(2)))
+    val (ha, hb) = hist.partition(_._1)
+    def census(keep: Int => Boolean): BigDecimal = (for {
+      (_, la, ca) <- ha; (_, lb, cb) <- hb
+      if keep(la) && keep(lb) && math.abs(la - lb) <= k
+    } yield BigDecimal(ca) * cb).sum
+    val bandCount = census(_ => true)
+    val prefixCount = fanLong + census(_ < shortLen)
+    // prefix filtering cannot prune once its rows reach the band's
+    val banded = prefixCount >= bandCount
+    val (plan, count) =
+      if (banded) ("length-band", bandCount) else ("prefix-filter", prefixCount)
+    if (banded || count > maxCandidates) {
       sigA.unpersist(blocking = false); sigB.unpersist(blocking = false)
     }
-    require(estimate.compareTo(
-        java.math.BigDecimal.valueOf(maxCandidates)) <= 0,
-      s"editDistanceJoin: candidate budget exceeded — Σ df(signature " +
-        s"grams) + short-band census estimates $estimate candidate " +
-        s"pairs (> cap $maxCandidates). The gram alphabet is too " +
-        "small for prefix filtering to prune (digit-only ids/codes " +
-        "keep every gram hot and the candidate set — like the true " +
-        "answer on such data — grows quadratically); slice or block " +
-        "the column first (e.g. linkByName with a block key, or a " +
-        "length/prefix stratification), or raise maxCandidates " +
-        "knowingly")
-    val candLong = sigA.select("v", "gram")
-      .withColumnRenamed("v", "source")
-      .join(gb.withColumnRenamed("v", "target"), "gram")
-      .select("source", "target")
-      .unionAll(ga.withColumnRenamed("v", "source")
-        .join(sigB.select("v", "gram")
-          .withColumnRenamed("v", "target"), "gram")
-        .select("source", "target"))
-    // both-short bucket: a (2k+1)-key length-band equi-join
-    val sa = va.where(F.length(F.col("v")) < shortLen)
-    val sb = vb.where(F.length(F.col("v")) < shortLen)
-    val candShort = sa.select(F.col("v").as("source"),
-        F.explode(F.sequence(F.length(F.col("v")) - k,
-          F.length(F.col("v")) + k)).as("__lb"))
-      .join(sb.select(F.col("v").as("target"),
-        F.length(F.col("v")).as("__lb")), "__lb")
-      .select("source", "target")
-    candLong.unionAll(candShort)
-      .where(F.col("source") =!= F.col("target"))
-      .distinct()
-      // banded exact verify: distance ≤ k comes back exact, > k as -1
+    require(count <= maxCandidates,
+      s"editDistanceJoin: candidate budget exceeded — the cheaper " +
+        s"candidate plan ($plan) emits $count candidate pairs (> cap " +
+        s"maxCandidates = $maxCandidates; prefix filter: Σ df(signature " +
+        s"grams) + short-band census = $prefixCount, length band: " +
+        s"$bandCount). On small-alphabet columns (digit-only ids/codes " +
+        "of one length) every gram is hot and the candidate set — like " +
+        "the true answer — grows quadratically; slice or block the column " +
+        "first (e.g. linkByName with a block key, or a length/prefix " +
+        "stratification), or raise maxCandidates knowingly")
+    // (2k+1)-key length-band equi-join: every pair with ||a|−|b|| ≤ k
+    def band(sa: DataFrame, sb: DataFrame): DataFrame =
+      sa.select(F.col("v").as("source"),
+          F.explode(F.sequence(F.length(F.col("v")) - k,
+            F.length(F.col("v")) + k)).as("__lb"))
+        .join(sb.select(F.col("v").as("target"),
+          F.length(F.col("v")).as("__lb")), "__lb")
+        .select("source", "target")
+    val distinctPair = F.col("source") =!= F.col("target")
+    val candidates =
+      if (banded) band(va, vb).where(distinctPair)
+      else {
+        val candLong = sigA.select("v", "gram")
+          .withColumnRenamed("v", "source")
+          .join(gb.withColumnRenamed("v", "target"), "gram")
+          .select("source", "target")
+          .unionAll(ga.withColumnRenamed("v", "source")
+            .join(sigB.select("v", "gram")
+              .withColumnRenamed("v", "target"), "gram")
+            .select("source", "target"))
+        val short = F.length(F.col("v")) < shortLen
+        candLong.unionAll(band(va.where(short), vb.where(short)))
+          .where(distinctPair)
+          .distinct()
+      }
+    // banded exact verify: distance ≤ k comes back exact, > k as -1
+    candidates
       .withColumn("lev", F.levenshtein(F.col("source"), F.col("target"), k))
       .where(F.col("lev") >= 0)
   }

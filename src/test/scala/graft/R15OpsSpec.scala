@@ -1033,6 +1033,74 @@ class R15OpsSpec extends SparkSpec {
     assert(eq.count() == 0)
   }
 
+  /** editDistanceJoin against the quadratic definition, plus whether the
+    * result was planned through q-gram signatures. */
+  private def editJoinVsBrute(src: Seq[String], tgt: Seq[String], k: Int)
+      : (Set[(String, String, Int)], Set[(String, String, Int)], Boolean) = {
+    import graft.harmonize.ValueMatcher
+    val a = src.toDF("s"); val b = tgt.toDF("t")
+    val joined = ValueMatcher.editDistanceJoin(a, "s", b, "t", k)
+    val usesGrams = joined.queryExecution.analyzed
+      .find(_.output.exists(_.name == "gram")).isDefined
+    val got = joined.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    val brute = a.distinct().crossJoin(b.distinct())
+      .where(F.col("s") =!= F.col("t"))
+      .withColumn("lev", F.levenshtein(F.col("s"), F.col("t")))
+      .where(F.col("lev") <= k)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+      .toSet
+    (got, brute, usesGrams)
+  }
+
+  test("editDistanceJoin: a dense-id domain takes the length-band plan, exact vs brute force") {
+    // every Customer#%09d value shares the hot prefix grams, so the
+    // signature joins would emit more rows than the length band
+    val rnd = new scala.util.Random(31)
+    val ids = (1 to 300).map(i => f"Customer#$i%09d")
+    def typo(s: String): String = {
+      val i = 9 + rnd.nextInt(s.length - 9)
+      val d = ('0' + rnd.nextInt(10)).toChar
+      rnd.nextInt(3) match {
+        case 0 => s.updated(i, d)
+        case 1 => s.patch(i, "", 1)
+        case _ => s.patch(i, d.toString, 0)
+      }
+    }
+    val src = ids.map(v => rnd.nextInt(3) match {
+      case 0 => v
+      case 1 => typo(v)
+      case _ => typo(typo(v))
+    })
+    val (got, brute, usesGrams) = editJoinVsBrute(src, ids, k = 2)
+    assert(!usesGrams, "dense ids must not be planned through gram signatures")
+    assert(brute.size > 300, s"${brute.size}")
+    assert(got == brute, s"missing=${brute -- got}\nextra=${got -- brute}")
+  }
+
+  test("editDistanceJoin: a Zipfian word domain keeps the prefix-filter plan, exact vs brute force") {
+    // rare words keep rare grams in every signature: about 9.2k
+    // prefix-plan rows against an 18.1k length-band census
+    val rnd = new scala.util.Random(37)
+    val vocab = (1 to 5000).map(_ =>
+      (1 to 3 + rnd.nextInt(6)).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
+    // Zipf(1) draw over the vocabulary by inverse CDF
+    val cdf = vocab.indices.map(r => 1.0 / (r + 1)).scanLeft(0.0)(_ + _).tail
+    def word(): String = {
+      val u = rnd.nextDouble() * cdf.last
+      vocab(math.min(cdf.indexWhere(_ >= u), vocab.size - 1))
+    }
+    val tgt = Seq.fill(300)(Seq.fill(3 + rnd.nextInt(3))(word()).mkString(" ")).distinct
+    val src = tgt.map { v =>
+      if (rnd.nextBoolean()) v
+      else v.updated(rnd.nextInt(v.length), ('a' + rnd.nextInt(26)).toChar)
+    }
+    val (got, brute, usesGrams) = editJoinVsBrute(src, tgt, k = 2)
+    assert(usesGrams, "a Zipfian gram universe must keep prefix filtering")
+    assert(brute.size > 100, s"${brute.size}")
+    assert(got == brute, s"missing=${brute -- got}\nextra=${got -- brute}")
+  }
+
   test("Drift.ksDrift: empty side errors loudly") {
     import graft.harmonize.Drift
     val a = Seq(1.0).toDF("x")
